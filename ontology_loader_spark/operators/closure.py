@@ -21,14 +21,15 @@ Reference semantics (``ontology_processor.py:152-211``):
   dedup (quirk Q4: closure rows unique per subject).
 
 Spark-first design: the reference runs one recursive SQLite traversal
-*per entity* (``:197``). We instead compute ONE global closure as an
-iterative frontier self-join to fixpoint (semi-naive evaluation):
-each iteration joins the current frontier against the (broadcastable)
-predicate-filtered edge set, anti-joins out pairs already reached, and
-unions into the accumulator. ``localCheckpoint()`` every iteration
-truncates lineage so plan depth stays O(1) instead of O(depth)
-(SURVEY.md §4.2.1). Iteration count is O(DAG height) — tens, never
-data-sized. Root/hub ancestors concentrate on few keys; the distinct
+*per entity* (``:197``). We instead compute ONE global closure as a
+driver-side fixpoint (``operators/fixpoint.py``): path doubling
+(repeated squaring of the pair relation, O(log2 depth) rounds) for the
+full closure, and semi-naive frontier BFS (each round joins the newly
+reached pairs against the broadcastable predicate-filtered edge set and
+anti-joins out pairs already reached) for the delta cones of
+incremental maintenance. ``localCheckpoint()`` every round truncates
+lineage so plan depth stays O(1) instead of O(depth) (SURVEY.md
+§4.2.1). Root/hub ancestors concentrate on few keys; the distinct
 inside the loop shuffles on (subject, object) pairs which are
 well-spread, so no salting is needed here (the pair key, not the hot
 ancestor key, is the shuffle key).
@@ -44,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontology_loader_spark.operators.curie import matches_ontology
+from ontology_loader_spark.operators.fixpoint import semi_naive, until_stable
 from ontology_loader_spark.partitioning import state_partitions
 from ontology_loader_spark.schemas import (
     CLOSURE_PREDICATE,
@@ -100,13 +102,37 @@ def direct_relations(
     )
 
 
+def hierarchy_pairs(
+    edges: DataFrame, predicates: tuple[str, ...] = DEFAULT_PREDICATES
+) -> DataFrame:
+    """Distinct ``(subject, object)`` pairs of the predicate-filtered
+    hierarchy, checkpointed: the ontology edge set is small relative to
+    the fact tables and is the probe side of every fixpoint round."""
+    return (
+        select_hierarchy_edges(edges, predicates)
+        .select("subject", "object")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _closure_triples(pairs: DataFrame, ontology: str) -> DataFrame:
+    """J3 projection of reached ``(s, o)`` pairs, F1-filtered on the
+    emitted ancestor only (Q2)."""
+    return pairs.filter(matches_ontology(F.col("o"), ontology)).select(
+        F.col("s").alias("subject"),
+        F.lit(CLOSURE_PREDICATE).alias("predicate"),
+        F.col("o").alias("object"),
+        F.lit(ONTOLOGY_RELATION_TYPE).alias("type"),
+    )
+
+
 def ancestor_closure(
     edges: DataFrame,
     relevant: DataFrame,
     ontology: str,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
     max_iterations: int = 64,
-    strategy: str = "doubling",
 ) -> DataFrame:
     """J2+J3 — reflexive transitive closure triples.
 
@@ -126,65 +152,43 @@ def ancestor_closure(
         SELECT s, 'entailed_isa_partof_closure', o FROM reach
         WHERE <F1 on o>
 
-    We keep the explicit driver loop (semi-naive, localCheckpoint per
-    iteration) for lineage/checkpoint control (SURVEY.md §4.2.1).
-
-    ``strategy``:
-
-    - ``"frontier"``: semi-naive BFS — O(depth) iterations, minimal
-      per-iteration intermediates. Best when depth is small or
-      per-iteration data is large.
-    - ``"doubling"`` (default): path-doubling (repeated squaring of the
-      reachability relation) — O(log2 depth) iterations at the cost of
-      denser intermediates. Best when driver-side iteration overhead
-      dominates (deep hierarchies, many small jobs) — this is the
-      option that keeps the serial fraction negligible in the
-      two-cluster-size scaling gate.
+    We keep the explicit driver loop (localCheckpoint per iteration)
+    for lineage/checkpoint control (SURVEY.md §4.2.1). The kernel is
+    path doubling: O(log2 depth) rounds keep the driver-side serial
+    fraction negligible in the two-cluster-size scaling gate. The
+    semi-naive frontier kernel is chosen only by
+    :func:`incremental_closure_delete`, from the measured size of its
+    re-derive cone.
     """
-    hedges = (
-        select_hierarchy_edges(edges, predicates)
-        .select("subject", "object")
-        .distinct()
+    return _closure_doubling(
+        hierarchy_pairs(edges, predicates), relevant, ontology, max_iterations
     )
-    # The ontology edge set is small relative to the fact tables —
-    # cache it; it is the probe side of every iteration.
-    hedges = hedges.localCheckpoint(eager=True)
 
-    if strategy == "doubling":
-        return _closure_doubling(hedges, relevant, ontology, max_iterations)
 
+def _closure_frontier(
+    hedges: DataFrame, relevant: DataFrame, ontology: str, max_iterations: int
+) -> DataFrame:
+    """Semi-naive BFS closure: O(depth) rounds, each joining the newly
+    reached pairs against the broadcast edge set — cost follows the
+    seeded cone, not the whole closure domain."""
     ids = relevant.select(F.col("id").alias("s"))
     # Reflexive seed (Q1): every relevant entity reaches itself.
-    closure = ids.select(F.col("s"), F.col("s").alias("o")).localCheckpoint(eager=True)
-    frontier = closure
+    seed = ids.select(F.col("s"), F.col("s").alias("o")).localCheckpoint(eager=True)
 
-    for _ in range(max_iterations):
-        stepped = (
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(
-                F.broadcast(hedges),
-                frontier["o"] == hedges["subject"],
-                "inner",
+                F.broadcast(hedges), frontier["o"] == hedges["subject"], "inner"
             )
             .select(frontier["s"], hedges["object"].alias("o"))
             .distinct()
         )
-        new = stepped.join(closure, ["s", "o"], "left_anti").localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        closure = closure.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    else:
-        raise RuntimeError(
-            f"ancestor_closure did not converge in {max_iterations} iterations "
-            "(cycle-heavy graph deeper than the bound?)"
-        )
 
-    return closure.filter(matches_ontology(F.col("o"), ontology)).select(
-        F.col("s").alias("subject"),
-        F.lit(CLOSURE_PREDICATE).alias("predicate"),
-        F.col("o").alias("object"),
-        F.lit(ONTOLOGY_RELATION_TYPE).alias("type"),
+    closure = semi_naive(
+        seed, step, ["s", "o"], "ancestor_closure", max_iterations,
+        bound="max_iterations",
     )
+    return _closure_triples(closure, ontology)
 
 
 def incremental_closure_update(
@@ -225,28 +229,14 @@ def incremental_closure_update(
     by :func:`ancestor_closure` over ``edges``. Returns the closure of
     ``edges ∪ new_edges`` in the same shape, equal to a fresh
     :func:`ancestor_closure` run (pinned by a randomized test)."""
-    all_hedges = (
-        select_hierarchy_edges(edges.unionByName(new_edges), predicates)
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    all_hedges = hierarchy_pairs(edges.unionByName(new_edges), predicates)
     # one count over the checkpointed edge set decides the join
     # strategy for every fixpoint iteration below
     if all_hedges.count() <= broadcast_edges_max:
         hedges_side = F.broadcast(all_hedges)
     else:
         hedges_side = all_hedges
-    new_h = (
-        select_hierarchy_edges(new_edges, predicates)
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    prior_pairs = prior_closure.select(
-        F.col("subject").alias("s"), F.col("object").alias("o")
-    )
+    new_h = hierarchy_pairs(new_edges, predicates)
 
     revreach = _reverse_reach(
         all_hedges, hedges_side, new_h.select("subject"), max_iterations,
@@ -264,43 +254,24 @@ def incremental_closure_update(
         .localCheckpoint(eager=True)
     )
 
-    known = prior_pairs.localCheckpoint(eager=True)
+    known = prior_closure.select(
+        F.col("subject").alias("s"), F.col("object").alias("o")
+    ).localCheckpoint(eager=True)
     added = frontier.join(known, ["s", "o"], "left_anti").localCheckpoint(eager=True)
-    acc = added
-    frontier = added
-    for _ in range(max_iterations):
-        if frontier.isEmpty():
-            break
-        stepped = (
-            frontier.join(
-                hedges_side,
-                frontier["o"] == all_hedges["subject"],
-            )
-            .select(frontier["s"], all_hedges["object"].alias("o"))
+
+    def step(delta: DataFrame) -> DataFrame:
+        return (
+            delta.join(hedges_side, delta["o"] == all_hedges["subject"])
+            .select(delta["s"], all_hedges["object"].alias("o"))
             .distinct()
-        )
-        new_pairs = (
-            stepped.join(known, ["s", "o"], "left_anti")
-            .join(acc, ["s", "o"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        acc = acc.unionByName(new_pairs).localCheckpoint(eager=True)
-        frontier = new_pairs
-    else:
-        raise RuntimeError(
-            f"incremental_closure_update did not converge in {max_iterations}"
+            .join(known, ["s", "o"], "left_anti")
         )
 
-    emitted = (
-        acc.filter(matches_ontology(F.col("o"), ontology))
-        .select(
-            F.col("s").alias("subject"),
-            F.lit(CLOSURE_PREDICATE).alias("predicate"),
-            F.col("o").alias("object"),
-            F.lit(ONTOLOGY_RELATION_TYPE).alias("type"),
-        )
+    acc = semi_naive(
+        added, step, ["s", "o"], "incremental_closure_update", max_iterations,
+        bound="max_iterations",
     )
-    return prior_closure.unionByName(emitted).distinct()
+    return prior_closure.unionByName(_closure_triples(acc, ontology)).distinct()
 
 
 def _reverse_reach(
@@ -317,31 +288,21 @@ def _reverse_reach(
     the property both incremental-maintenance directions rely on.
     ``hedges_side`` is ``all_hedges`` possibly wrapped in a broadcast
     hint (decided once by the caller for every iteration)."""
-    revreach = seeds.select(
+    seed = seeds.select(
         F.col("subject").alias("u"), F.col("subject").alias("a")
     ).distinct().localCheckpoint(eager=True)
-    rfrontier = revreach
-    for _ in range(max_iterations):
-        stepped = (
-            rfrontier.join(
-                hedges_side,
-                rfrontier["u"] == all_hedges["object"],
-            )
-            .select(all_hedges["subject"].alias("u"), rfrontier["a"])
+
+    def step(delta: DataFrame) -> DataFrame:
+        return (
+            delta.join(hedges_side, delta["u"] == all_hedges["object"])
+            .select(all_hedges["subject"].alias("u"), delta["a"])
             .distinct()
         )
-        new_rev = stepped.join(revreach, ["u", "a"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new_rev.isEmpty():
-            break
-        revreach = revreach.unionByName(new_rev).localCheckpoint(eager=True)
-        rfrontier = new_rev
-    else:
-        raise RuntimeError(
-            f"{op_name} reverse pass did not converge in {max_iterations}"
-        )
-    return revreach
+
+    return semi_naive(
+        seed, step, ["u", "a"], f"{op_name} reverse pass", max_iterations,
+        bound="max_iterations",
+    )
 
 
 def incremental_closure_delete(
@@ -369,7 +330,7 @@ def incremental_closure_delete(
     2. ``affected`` = those sources ∩ closure domain; every stored row
        of an affected subject is invalidated (over-delete);
     3. re-derive: a fresh closure restricted to the affected subjects
-       over the remaining edge set. Strategy is dispatched on the
+       over the remaining edge set. The kernel is dispatched on the
        MEASURED cone size: a small cone seeds a frontier BFS (cost ~
        the cone, O(depth) driver rounds); a cone covering most of the
        closure domain (a deletion near the roots — also the gate's
@@ -382,12 +343,7 @@ def incremental_closure_delete(
     ``prior_closure`` must be the closure of ``edges``; returns the
     closure of ``edges − deleted_edges``, equal to a fresh
     :func:`ancestor_closure` run (randomized-delta test + gate)."""
-    old_h = (
-        select_hierarchy_edges(edges, predicates)
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    old_h = hierarchy_pairs(edges, predicates)
     if old_h.count() <= broadcast_edges_max:
         hedges_side = F.broadcast(old_h)
     else:
@@ -425,14 +381,13 @@ def incremental_closure_delete(
     )
     # both sides of the dispatch are dictionary-bounded counts (the
     # closure domain, not the corpus) — two cheap actions
-    strategy = (
-        "doubling"
+    kernel = (
+        _closure_doubling
         if affected.count() * 2 >= relevant.count()
-        else "frontier"
+        else _closure_frontier
     )
-    rederived = ancestor_closure(
-        remaining, affected, ontology, predicates, max_iterations,
-        strategy=strategy,
+    rederived = kernel(
+        hierarchy_pairs(remaining, predicates), affected, ontology, max_iterations
     )
     return kept.select(*prior_closure.columns).unionByName(rederived)
 
@@ -444,10 +399,8 @@ def _closure_doubling(
     fixpoint — reach(k+1) = reach(k) ∪ (reach(k) ⋈ reach(k)); pair
     count is the convergence test (one action per iteration)."""
     spark = hedges.sparkSession
-    reach = hedges.select(F.col("subject").alias("s"), F.col("object").alias("o"))
-    reach = reach.localCheckpoint(eager=True)
-    n = reach.count()
-    for _ in range(max_iterations):
+
+    def step(reach: DataFrame, n: int) -> DataFrame:
         squared = (
             reach.alias("l")
             .join(reach.alias("r"), F.col("l.o") == F.col("r.s"))
@@ -456,32 +409,18 @@ def _closure_doubling(
         # iteration-state width follows the observed pair count:
         # dictionary-scale graphs stay on a few tasks per round,
         # corpus-scale graphs fan out up to the session shuffle width
-        reach = (
+        return (
             reach.unionByName(squared)
             .distinct()
             .coalesce(state_partitions(spark, n * 2))
-            .localCheckpoint(eager=True)
         )
-        n2 = reach.count()
-        if n2 == n:
-            break
-        n = n2
-    else:
-        raise RuntimeError(
-            f"_closure_doubling did not converge in {max_iterations} iterations"
-        )
+
+    reach = until_stable(
+        hedges.select(F.col("subject").alias("s"), F.col("object").alias("o")),
+        step, "ancestor_closure", max_iterations, bound="max_iterations",
+    )
     rel = relevant.select(F.col("id").alias("s"))
     reached = rel.join(reach, "s", "inner").select("s", "o")
     reflexive = rel.select("s", F.col("s").alias("o"))
     # a cycle can make s reach itself — dedup against the reflexive seed
-    return (
-        reflexive.unionByName(reached)
-        .distinct()
-        .filter(matches_ontology(F.col("o"), ontology))
-        .select(
-            F.col("s").alias("subject"),
-            F.lit(CLOSURE_PREDICATE).alias("predicate"),
-            F.col("o").alias("object"),
-            F.lit(ONTOLOGY_RELATION_TYPE).alias("type"),
-        )
-    )
+    return _closure_triples(reflexive.unionByName(reached).distinct(), ontology)

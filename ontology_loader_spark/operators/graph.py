@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.operators.closure import hierarchy_pairs
+from ontology_loader_spark.operators.fixpoint import semi_naive, until_stable
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 SCALE = 10 ** 12
@@ -52,12 +54,7 @@ def pagerank(
     edge graph. Node domain = every edge endpoint. Output
     (node, rank) with rank in SCALE-units; ranks at iteration
     ``iters`` equal the unrolled SQL oracle value-for-value."""
-    e = (
-        edges.filter(F.col("predicate").isin(*predicates))
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = hierarchy_pairs(edges, predicates)
     nodes = (
         e.select(F.col("subject").alias("node"))
         .unionByName(e.select(F.col("object").alias("node")))
@@ -308,7 +305,7 @@ def term_depth(
     anti-joins already-settled nodes, so a node is settled at its
     FIRST (minimal) distance — O(DAG height) rounds of one join +
     one distinct each, ``localCheckpoint`` per round truncating
-    lineage (the ``operators/closure.py`` discipline). The edge set
+    lineage (``operators/fixpoint.py``). The edge set
     broadcasts (ontology-bounded), the settled/frontier sets stay
     distributed.
 
@@ -320,27 +317,18 @@ def term_depth(
     ``max_iter``), the function raises instead of silently dropping
     the deep nodes that the unbounded recursive oracle would keep.
     """
-    hedges = (
-        edges.filter(F.col("predicate").isin(*predicates))
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    hedges = hierarchy_pairs(edges, predicates)
     subjects = hedges.select(F.col("subject").alias("id")).distinct()
     objects = hedges.select(F.col("object").alias("id")).distinct()
     # roots: nodes that never appear as a child (no outgoing hierarchy
     # edge) — in the child->parent orientation, objects minus subjects
-    frontier = objects.join(subjects, "id", "left_anti").select(
+    roots = objects.join(subjects, "id", "left_anti").select(
         "id", F.lit(0).cast("int").alias("depth")
     ).localCheckpoint(eager=True)
-    settled = frontier
-    for _ in range(max_iter):
-        if frontier.isEmpty():
-            break
-        step = (
-            hedges.join(
-                frontier, hedges["object"] == frontier["id"], "inner"
-            )
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
+            hedges.join(frontier, hedges["object"] == frontier["id"], "inner")
             .select(
                 hedges["subject"].alias("id"),
                 (frontier["depth"] + 1).cast("int").alias("depth"),
@@ -348,22 +336,8 @@ def term_depth(
             .groupBy("id")
             .agg(F.min("depth").alias("depth"))
         )
-        frontier = step.join(
-            settled.select("id"), "id", "left_anti"
-        ).localCheckpoint(eager=True)
-        settled = settled.unionByName(frontier).localCheckpoint(eager=True)
-    else:
-        # max_iter exhausted with the frontier still advancing: nodes
-        # deeper than max_iter would silently vanish from the output
-        # while the unbounded recursive oracle (term_depth_sql) keeps
-        # them — refuse rather than diverge on a deep hierarchy.
-        if not frontier.isEmpty():
-            raise RuntimeError(
-                f"term_depth: hierarchy deeper than max_iter={max_iter} "
-                "(frontier still non-empty); raise max_iter — the "
-                "DuckDB oracle walk is unbounded and would disagree"
-            )
-    return settled
+
+    return semi_naive(roots, step, ["id"], "term_depth", max_iter)
 
 
 def term_depth_sql(predicates_sql: str) -> str:
@@ -650,12 +624,9 @@ def kcore(
     must fail loudly, never silently diverge).
     """
     und = pairs.select("u", "v").localCheckpoint(eager=True)
-    alive = und.select(F.col("u").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
-    n_alive = alive.count()
-    for _ in range(max_rounds):
-        deg = (
+
+    def degrees(alive: DataFrame) -> DataFrame:
+        return (
             und.join(alive.hint("broadcast"), und["u"] == alive["node"], "left_semi")
             .join(
                 alive.select(F.col("node").alias("vnode")).hint("broadcast"),
@@ -664,27 +635,16 @@ def kcore(
             )
             .groupBy("u")
             .agg(F.count("*").alias("degree"))
+            .filter(F.col("degree") >= k)
         )
-        survivors = (
-            deg.filter(F.col("degree") >= k)
-            .select(F.col("u").alias("node"))
-            .localCheckpoint(eager=True)
-        )
-        n_next = survivors.count()
-        if n_next == n_alive:
-            return (
-                deg.filter(F.col("degree") >= k)
-                .select(
-                    F.col("u").alias("node"),
-                    F.col("degree").cast("bigint").alias("degree"),
-                )
-            )
-        alive, n_alive = survivors, n_next
-        if n_alive == 0:
-            return alive.withColumn("degree", F.lit(0).cast("bigint"))
-    raise RuntimeError(
-        f"kcore: not converged after max_rounds={max_rounds}; the "
-        f"unrolled oracle would diverge — raise max_rounds on both sides"
+
+    core = until_stable(
+        und.select(F.col("u").alias("node")).distinct(),
+        lambda alive, _n: degrees(alive).select(F.col("u").alias("node")),
+        "kcore", max_rounds, bound="max_rounds",
+    )
+    return degrees(core).select(
+        F.col("u").alias("node"), F.col("degree").cast("bigint").alias("degree")
     )
 
 

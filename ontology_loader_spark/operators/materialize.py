@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.operators.closure import hierarchy_pairs
+from ontology_loader_spark.operators.fixpoint import semi_naive
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 #: Both the engine loop and the SQL oracles bound path length at the
@@ -47,17 +49,6 @@ from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 #: chain deeper than this is dropped by BOTH (and cycle-trapped chains,
 #: which never reach a root, are dropped identically too).
 MAX_PATH_HOPS = 64
-
-
-def _hierarchy_pairs(
-    edges: DataFrame, predicates: tuple[str, ...]
-) -> DataFrame:
-    return (
-        edges.filter(F.col("predicate").isin(*predicates))
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
 
 
 def transitive_reduction(
@@ -77,33 +68,22 @@ def transitive_reduction(
     guard raises rather than returning a wrong reduction if the graph
     outlives ``max_iter`` (the ``term_depth`` discipline).
     """
-    hedges = _hierarchy_pairs(edges, predicates)
-    walk = hedges
-    frontier = hedges
-    for _ in range(max_iter):
-        frontier = (
+    hedges = hierarchy_pairs(edges, predicates)
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.alias("f")
-            .join(
-                hedges.alias("e"),
-                F.col("f.object") == F.col("e.subject"),
-            )
+            .join(hedges.alias("e"), F.col("f.object") == F.col("e.subject"))
             .select(
                 F.col("f.subject").alias("subject"),
                 F.col("e.object").alias("object"),
             )
             .distinct()
-            .join(walk, ["subject", "object"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if frontier.isEmpty():
-            break
-        walk = walk.unionByName(frontier).localCheckpoint(eager=True)
-    else:
-        if not frontier.isEmpty():
-            raise RuntimeError(
-                f"transitive_reduction: reachability still growing after "
-                f"max_iter={max_iter} rounds; raise max_iter"
-            )
+
+    walk = semi_naive(
+        hedges, step, ["subject", "object"], "transitive_reduction", max_iter
+    )
     # redundant (s, o): some edge s->m with m reaching o (path >= 2)
     redundant = (
         hedges.alias("e")
@@ -166,9 +146,12 @@ def term_path_to_root(
     contain cycles and they must not abort the load).
 
     O(depth) rounds over one row per unfinished node; the parent map
-    is ontology-bounded and broadcasts.
+    is ontology-bounded and broadcasts. The loop is written out rather
+    than run on ``operators/fixpoint.py``: its emission is bounded by
+    :data:`MAX_PATH_HOPS` and the oracle mirrors that bound, so running
+    out of rounds is the contract here, not a non-convergence error.
     """
-    hedges = _hierarchy_pairs(edges, predicates)
+    hedges = hierarchy_pairs(edges, predicates)
     min_parent = (
         hedges.groupBy("subject")
         .agg(F.min("object").alias("parent"))

@@ -22,8 +22,8 @@ Scale design:
   cycle node keeps in- and out-degree within the core), while a
   near-DAG collapses to its tiny cycle-relevant core in O(height)
   cheap semi-joins over the *edge* set. Phase 2 runs the exact
-  non-reflexive transitive closure (semi-naive, same discipline as
-  ``operators/closure.py``) on the trimmed core only, and reports the
+  non-reflexive transitive closure (``operators/fixpoint.py``
+  ``semi_naive``) on the trimmed core only, and reports the
   nodes that reach themselves. The expensive exact phase therefore
   touches |core| ~ |cycles + inter-cycle paths| pairs, not
   |terms| x depth.
@@ -34,7 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ontology_loader_spark.operators.closure import select_hierarchy_edges
+from ontology_loader_spark.operators.closure import (
+    hierarchy_pairs,
+    select_hierarchy_edges,
+)
+from ontology_loader_spark.operators.fixpoint import semi_naive, until_stable
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 
@@ -64,31 +68,18 @@ def _trim_to_cycle_core(hedges: DataFrame, max_iter: int) -> DataFrame:
     stops shrinking."""
     # Round count: each round peels every current source/sink, so a
     # dangling PATH of length L peels from both ends in ~L/2 rounds —
-    # bounded by the hierarchy height (tens) in any real ontology. A
-    # pathological deeper residue just stops trimming at max_iter and
-    # hands a larger (still correct) core to the exact phase: the trim
-    # is purely an optimization, never a correctness dependency.
-    core = hedges.localCheckpoint(eager=True)
-    n = core.count()
-    for _ in range(max_iter):
-        if n == 0:
-            break
+    # bounded by the hierarchy height (tens) in any real ontology.
+
+    def step(core: DataFrame, _n: int) -> DataFrame:
         subjects = core.select("subject").distinct()
         objects = core.select(F.col("object").alias("subject")).distinct()
-        core = (
-            core.join(
-                F.broadcast(subjects.withColumnRenamed("subject", "object")),
-                "object",
-                "left_semi",
-            )
-            .join(F.broadcast(objects), "subject", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        n_next = core.count()
-        if n_next == n:
-            break
-        n = n_next
-    return core
+        return core.join(
+            F.broadcast(subjects.withColumnRenamed("subject", "object")),
+            "object",
+            "left_semi",
+        ).join(F.broadcast(objects), "subject", "left_semi")
+
+    return until_stable(hedges, step, "cycle_members trim", max_iter)
 
 
 def cycle_members(
@@ -103,34 +94,27 @@ def cycle_members(
     Phase 1 trims to the cycle-relevant core; phase 2 computes the
     non-reflexive closure of the core semi-naively (frontier join +
     anti-join against reached, ``localCheckpoint`` per round — the
-    closure module's discipline) and keeps ``s = o`` pairs. Exactness
+    fixpoint module's discipline) and keeps ``s = o`` pairs. Exactness
     does not depend on the trim: trimming only removes edges that
     provably lie on no cycle-reaching path.
     """
-    core = _trim_to_cycle_core(
-        select_hierarchy_edges(edges, predicates)
-        .select("subject", "object")
-        .distinct(),
-        max_iter,
-    )
-    reached = core.select(
-        F.col("subject").alias("s"), F.col("object").alias("o")
-    ).localCheckpoint(eager=True)
-    frontier = reached
-    for _ in range(max_iter):
-        if frontier.isEmpty():
-            break
-        step = (
+    core = _trim_to_cycle_core(hierarchy_pairs(edges, predicates), max_iter)
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(
                 F.broadcast(core), frontier["o"] == core["subject"], "inner"
             )
             .select(frontier["s"], core["object"].alias("o"))
             .distinct()
         )
-        frontier = step.join(
-            reached, ["s", "o"], "left_anti"
-        ).localCheckpoint(eager=True)
-        reached = reached.unionByName(frontier).localCheckpoint(eager=True)
+
+    reached = semi_naive(
+        core.select(
+            F.col("subject").alias("s"), F.col("object").alias("o")
+        ).localCheckpoint(eager=True),
+        step, ["s", "o"], "cycle_members", max_iter,
+    )
     return (
         reached.filter(F.col("s") == F.col("o"))
         .select(F.col("s").alias("id"))

@@ -107,6 +107,12 @@ def connected_components(
 
     ``nodes``: one column ``node``; ``pairs``: columns ``u, v``
     (symmetric). Returns (node, component).
+
+    The loop is written out rather than run on
+    ``operators/fixpoint.py``: labels are replaced each round without
+    changing the row count, so convergence needs a changed-label test
+    that neither a new-row count nor a state count gives without an
+    extra job per round.
     """
     # iteration-state width follows the observed graph size: a
     # dictionary-bounded co-mention graph runs a few tasks per round; a

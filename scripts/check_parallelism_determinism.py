@@ -116,7 +116,10 @@ def _stream_asof(spark, sf_dir: str, ckpt: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
     return spark.sql(f"select * from {name}")
 
 
@@ -137,7 +140,10 @@ def _stream_winsor(spark, sf_dir: str, ckpt: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
     # final emission per type (n_events grows monotonically)
     emitted = spark.sql(f"select * from {name}")
     w = Window.partitionBy("event_type").orderBy(F.desc("n_events"))
@@ -195,7 +201,10 @@ def _stream_conv_stats(spark, sf_dir: str, ckpt: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
     emitted = spark.sql(f"select * from {name}")
     w = Window.partitionBy("conv_id").orderBy(F.desc("n_turns"))
     return (

@@ -129,7 +129,7 @@ def main() -> None:
     def ontology_side():
         rel = relevant_entities(td, derive.ONT).localCheckpoint(eager=True)
         ontology_out["closure"] = ancestor_closure(
-            ed, rel, derive.ONT, strategy="doubling"
+            ed, rel, derive.ONT
         ).localCheckpoint(eager=True)
         ontology_out["direct"] = direct_relations(ed, rel).localCheckpoint(eager=True)
         ontology_out["redirects"] = redirect_map(td)

@@ -37,7 +37,10 @@ def test_conversation_progress(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
 
     # update mode emits one row per conv per micro-batch; the final
     # state is the row with the max n_turns_seen per conv
@@ -87,7 +90,10 @@ def test_conversation_progress_tws_matches_apply_in_pandas(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
 
     final = {
         r["conv_id"]: (r["n_turns_seen"], r["contiguous_prefix"])
@@ -222,7 +228,10 @@ def test_asof_join_stream_query(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
 
     got = {
         r["l_event_id"]: (r["user_id"], r["l_ts"], r["l_value"],
@@ -299,7 +308,10 @@ def test_winsorized_stream_query_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
 
     # last emission per type = max n_events per type (monotone growth)
     emitted = spark.sql("select * from winsor_stream").collect()
@@ -408,7 +420,10 @@ def test_conv_stats_stream_query_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
 
     emitted = spark.sql("select * from conv_stats_stream").collect()
     last: dict = {}

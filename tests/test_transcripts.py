@@ -125,6 +125,20 @@ def test_redirect_map_follows_chains(spark):
     assert got == {"A:1": "A:3", "A:2": "A:3"}
 
 
+def test_redirect_map_resolves_chain_longer_than_round_bound(spark):
+    """A 20-hop replaced_by chain outlasts the 16-round bound at one hop
+    per round; every source must still resolve to the live end, as the
+    recursive oracle (q_redirect_map) does."""
+    n = 20
+    td = spark.createDataFrame(
+        [(f"C:{i}", f"c{i}", "", [], True, f"C:{i + 1}") for i in range(n)]
+        + [(f"C:{n}", "live", "", [], False, None)],
+        TERM_DICT_SCHEMA,
+    )
+    got = {r["src"]: r["dst"] for r in redirect_map(td).collect()}
+    assert got == {f"C:{i}": f"C:{n}" for i in range(n)}
+
+
 def test_sharded_detection_equals_broadcast(spark):
     """The sharded (no-driver-collect) detector must return exactly the
     unsharded result on the derived corpus — shard/salt choices are

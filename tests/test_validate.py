@@ -86,3 +86,20 @@ def test_cycle_members_excludes_inter_cycle_path(spark):
     assert "x" in core_nodes  # trim alone keeps the connector
     got = {r["id"] for r in cycle_members(ed).collect()}
     assert got == {"a", "b", "c", "d"}  # exact phase prunes it
+
+
+def test_cycle_members_raises_past_round_bound(spark):
+    """A 6-node directed cycle needs 6 exact-phase rounds before any
+    node reaches itself; a smaller bound must raise, never return a
+    partial (empty) member set."""
+    import pytest
+
+    from ontology_loader_spark.operators.validate import cycle_members
+
+    nodes = "abcdef"
+    ed = _edges(
+        spark,
+        [(u, "rdfs:subClassOf", v) for u, v in zip(nodes, nodes[1:] + nodes[0])],
+    )
+    with pytest.raises(RuntimeError, match="max_iter"):
+        cycle_members(ed, max_iter=3).collect()
